@@ -801,11 +801,7 @@ def _docs_stream_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
 
     from example_beam_spark.sources.parquet import parquet_members, table_path
-    from example_beam_spark.streaming.entries import _prepare_stream_session
 
-    _prepare_stream_session(
-        spark, min(8, spark.sparkContext.defaultParallelism)
-    )
     fp = tuple(
         sorted(
             (os.path.basename(m), os.stat(m).st_mtime_ns, os.stat(m).st_size)
@@ -854,17 +850,7 @@ def _docs_stream_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # member + both sentinels in ONE batch — the doc rows are processed
     # with the watermark still unset, and the final flush runs in the
     # post-watermark no-data micro-batch, cutting two ~1-2 s machinery
-    # batches per drain. Requires noDataMicroBatches (default true).
-    assert (
-        spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-        ).lower()
-        == "true"
-    ), (
-        "collapsed staging schedule: final sentinel flush depends on the "
-        "post-watermark no-data micro-batch, but "
-        "spark.sql.streaming.noDataMicroBatches.enabled is false"
-    )
+    # batches per drain. drain() pins noDataMicroBatches on for it.
     return (
         spark.readStream.schema("doc_id long, text string, ts_us long")
         .option("maxFilesPerTrigger", 3)
@@ -894,6 +880,7 @@ def docs_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice, with its shared-gram count — stream-static gram join +
     watermarked windowed count, append mode."""
     from example_beam_spark.operators.dedup import _shingle_array
+    from example_beam_spark.streaming.drain import bounded_drain_instances
     from example_beam_spark.streaming.entries import run_to_append
 
     docs = load_table(spark, sf_dir, "documents")
@@ -923,7 +910,7 @@ def docs_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = matches.groupBy(F.window("ts", "1 hour"), "doc_id").agg(
         F.count("*").alias("n_shared_grams")
     )
-    out = run_to_append(agg, spark)
+    out = run_to_append(agg, spark, instances=bounded_drain_instances(spark))
     # one arrival second per doc -> exactly one window per doc; the sum
     # is a schema-level fold, never a cross-window merge
     return out.groupBy("doc_id").agg(

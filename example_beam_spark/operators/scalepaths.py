@@ -766,7 +766,7 @@ def ann_topk_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming DataFrame — a stateless Arrow transform, so no watermark or
 # state store), and each micro-batch lands as its own cell-partitioned
 # parquet directory through the repo's idempotent per-batch-id
-# overwrite sink (the run_to_append delivery discipline: a redelivered
+# overwrite sink (drain()'s delivery discipline: a redelivered
 # batch REPLACES its own output, giving exactly-once index growth under
 # at-least-once foreachBatch). The queryable index is then the base
 # directory plus the batch directories — ivfpq_scan_codes prunes
@@ -791,14 +791,13 @@ _STREAM_INDEX: dict[tuple, tuple] = {}
 def _ivfpq_streamed_index(spark: SparkSession, sf_dir: str) -> tuple:
     """(roots, C, books, n_total) — base encoded in batch, delta
     ingested through an availableNow stream (section comment)."""
-    import glob
-    import os
     import tempfile
 
     from example_beam_spark.operators.structures import _layout_key, pq_encode_frame
-    from example_beam_spark.streaming.entries import (
-        _prepare_stream_session,
-        _restore_session,
+    from example_beam_spark.streaming.drain import (
+        batch_dirs,
+        bounded_drain_instances,
+        drain,
     )
 
     key = _layout_key(spark, sf_dir, "embeddings")
@@ -826,46 +825,32 @@ def _ivfpq_streamed_index(spark: SparkSession, sf_dir: str) -> tuple:
     stage_dir = tempfile.mkdtemp(prefix="ebs_ivfpq_sstage_")
     delta.repartition(3).write.mode("overwrite").parquet(stage_dir)
 
-    out_dir = tempfile.mkdtemp(prefix="ebs_ivfpq_sbatches_")
-    ckpt = tempfile.mkdtemp(prefix="ebs_ivfpq_sckpt_")
-    _prepare_stream_session(spark, min(8, spark.sparkContext.defaultParallelism))
-
-    def sink(bdf: DataFrame, bid: int) -> None:
+    def write_batch(bdf: DataFrame, bid: int, path: str) -> None:
         # an empty micro-batch (possible when the delta has fewer rows
         # than the 3-way staging repartition) must not write a dir: a
         # _SUCCESS-only dir still globs into roots and breaks schema
         # inference on the multi-root read
         if bdf.isEmpty():
             return
-        # idempotent per batch id: overwrite THIS batch's directory
         (
             bdf.repartition(F.col("cell"))
             .write.mode("overwrite")
             .partitionBy("cell")
-            .parquet(os.path.join(out_dir, f"batch-{bid:09d}"))
+            .parquet(path)
         )
 
-    try:
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
-        q = (
-            pq_encode_frame(stream, C, books)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        _restore_session(spark)
-
-    roots = [base_dir] + sorted(
-        glob.glob(os.path.join(glob.escape(out_dir), "batch-*"))
+    stream = (
+        spark.readStream.schema("vec_id long, embedding array<float>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage_dir)
     )
+    out_dir = drain(
+        pq_encode_frame(stream, C, books),
+        instances=bounded_drain_instances(spark),
+        output_mode="append",
+        write_batch=write_batch,
+    )
+    roots = [base_dir] + batch_dirs(out_dir)
     hit = (roots, C, books, emb.count())
     _STREAM_INDEX[key] = hit
     return hit

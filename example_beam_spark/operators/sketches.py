@@ -334,18 +334,18 @@ def hll_distinct_users_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB design: state volume is m registers regardless of stream
     cardinality or retention — no watermark needed, nothing evicted,
     no distinct state to grow."""
+    from example_beam_spark.streaming.drain import bounded_drain_instances
     from example_beam_spark.streaming.entries import read_events_stream, run_to_final
 
-    # 64-bucket bounded-state agg: few store instances win (r14 A/B,
-    # tools/drain_sizing_ab.py: 1.8 s at 32 -> 1.2 s at 8)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    )
+    ev = read_events_stream(spark, sf_dir)
     agg = ev.select(*_hll_projection(F.col("user_id"))).groupBy("bucket").agg(
         F.max("rho").alias("m_j")
     )
-    regs = run_to_final(agg, ["bucket"], spark)
+    # 64-bucket bounded-state agg: few store instances win (r14 A/B,
+    # OPTIMIZATION_r14.md §3: 1.8 s at 32 -> 1.2 s at 8)
+    regs = run_to_final(
+        agg, ["bucket"], spark, instances=bounded_drain_instances(spark)
+    )
     return _hll_finish(regs, load_table(spark, sf_dir, "events"))
 
 
@@ -512,14 +512,10 @@ def value_quantile_histogram_stream(spark: SparkSession, sf_dir: str) -> DataFra
     retention; counts merge associatively (update-mode partial+final),
     no watermark needed, nothing evicted. The quantile read-off runs on
     the 64-row drained state."""
+    from example_beam_spark.streaming.drain import bounded_drain_instances
     from example_beam_spark.streaming.entries import read_events_stream, run_to_final
 
-    # 64-bin bounded-state agg: same store-machinery profile as the HLL
-    # stream (r14 A/B above)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    )
+    ev = read_events_stream(spark, sf_dir)
     bin_col = F.least(
         F.lit(HIST_BINS - 1),
         F.greatest(
@@ -530,7 +526,9 @@ def value_quantile_histogram_stream(spark: SparkSession, sf_dir: str) -> DataFra
     agg = ev.select(bin_col.alias("bin")).groupBy("bin").agg(
         F.count("*").alias("cnt")
     )
-    bins = run_to_final(agg, ["bin"], spark)
+    # 64-bin bounded-state agg: same store-machinery profile as the HLL
+    # stream (r14 A/B above)
+    bins = run_to_final(agg, ["bin"], spark, instances=bounded_drain_instances(spark))
 
     tot = F.broadcast(bins.agg(F.sum("cnt").alias("n")))
     win = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)

@@ -1164,6 +1164,7 @@ def _stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> str:
     drain, same answer — idempotent by the sink's commit log)."""
     import tempfile
 
+    from example_beam_spark.streaming.drain import FileSink, drain
     from example_beam_spark.streaming.entries import read_events_stream
 
     # fingerprinted key: regenerated source data -> fresh sink dir AND
@@ -1177,37 +1178,18 @@ def _stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> str:
             tempfile.mkdtemp(prefix="ebs_stream_sink_ckpt_"),
         )
         _STREAM_SINK_DIRS[key] = hit
-    out, ckpt = hit
-    # read_events_stream sizes the session for a drain
-    # (_prepare_stream_session); the drain helpers restore it in their
-    # finally — this entry drains directly, so it must restore too or
-    # the override leaks into later batch queries in the same session
-    from example_beam_spark.streaming.entries import _restore_session
-
-    try:
-        src = read_events_stream(spark, sf_dir).withColumn(
-            "event_date", F.col("ts").cast("date")
-        )
-        q = (
-            src.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .partitionBy("event_date")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # awaitTermination(timeout) returns False on timeout with the
-        # query still RUNNING — reading the sink then would see a
-        # partial drain (silent oracle mismatch). Fail loudly instead
-        # (round-11 advice #1).
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "events stream drain did not terminate within 300s"
-            )
-    finally:
-        _restore_session(spark)
-    return out
+    src = read_events_stream(spark, sf_dir).withColumn(
+        "event_date", F.col("ts").cast("date")
+    )
+    # stateless drain: the instance count only sizes its shuffles
+    drain(
+        src,
+        instances=spark.sparkContext.defaultParallelism,
+        output_mode="append",
+        write_batch=FileSink(partition_by=("event_date",)),
+        dirs=hit,
+    )
+    return hit[0]
 
 
 @register("events_stream_partitioned_sink", oracle=_COMPACT_ORACLE)

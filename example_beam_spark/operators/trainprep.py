@@ -408,18 +408,16 @@ def cms_token_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         CMS_D,
         cms_col_of,
     )
-    from example_beam_spark.streaming.entries import (
-        _prepare_stream_session,
-        _stage_dir,
-        run_to_final,
-    )
+    from example_beam_spark.streaming.drain import bounded_drain_instances
+    from example_beam_spark.streaming.entries import run_to_final, stage_dir
 
-    _prepare_stream_session(spark, min(8, spark.sparkContext.defaultParallelism))
-    d = _stage_dir(sf_dir, "documents")
     stream = spark.readStream.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(d)
-    cells = run_to_final(_cms_cells_stream(stream), ["r", "c"], spark)
+    ).parquet(stage_dir(sf_dir, "documents"))
+    cells = run_to_final(
+        _cms_cells_stream(stream), ["r", "c"], spark,
+        instances=bounded_drain_instances(spark),
+    )
     rows = F.array(*[F.lit(i) for i in range(CMS_D)])
     # probe stage (batch, identical to cms_token_counts' probe side)
     docs = load_table(spark, sf_dir, "documents")
@@ -572,17 +570,13 @@ def events_topk_types_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream's state is the open windows' count cells only and the final
     counts provably equal the batch counts (order/batch-boundary
     insensitive sums) — the same oracle gates both stages."""
+    from example_beam_spark.streaming.drain import bounded_drain_instances
     from example_beam_spark.streaming.entries import (
         read_events_stream,
         run_to_final,
     )
 
-    # windowed count into few groups: store machinery dominates (r14
-    # drain-sizing A/B class — tools/drain_sizing_ab.py)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).withWatermark("ts", "1 hour")
+    ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = (
         ev.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").cast("long").alias("n_events"))
@@ -592,7 +586,12 @@ def events_topk_types_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    counted = run_to_final(agg, ["hour_start", "event_type"], spark)
+    # windowed count into few groups: store machinery dominates (r14
+    # drain-sizing A/B class — OPTIMIZATION_r14.md §3)
+    counted = run_to_final(
+        agg, ["hour_start", "event_type"], spark,
+        instances=bounded_drain_instances(spark),
+    )
     w = Window.partitionBy("hour_start").orderBy(
         F.desc("n_events"), "event_type"
     )
@@ -651,17 +650,13 @@ def kmv_distinct_users_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         KMV_K,
         _h60_spark,
     )
+    from example_beam_spark.streaming.drain import bounded_drain_instances
     from example_beam_spark.streaming.entries import (
         read_events_stream,
         run_to_append,
     )
 
-    # bounded per-bucket state (k smallest hashes): few instances win
-    # (r14 drain-sizing A/B class — tools/drain_sizing_ab.py)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    )
+    ev = read_events_stream(spark, sf_dir)
     keyed = ev.select(
         _h60_spark(F.col("user_id").cast("string")).alias("h")
     ).withColumn("bucket", F.pmod("h", F.lit(_KMV_BUCKETS)))
@@ -672,7 +667,9 @@ def kmv_distinct_users_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    pool = run_to_append(cand, spark)
+    # bounded per-bucket state (k smallest hashes): few instances win
+    # (r14 drain-sizing A/B class — OPTIMIZATION_r14.md §3)
+    pool = run_to_append(cand, spark, instances=bounded_drain_instances(spark))
     bottomk = (
         pool.select(F.explode("hashes").alias("h"))
         .distinct()

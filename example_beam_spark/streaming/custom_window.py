@@ -230,7 +230,13 @@ def make_ad_event_window_bucketed_fn(
                         ts + timedelta(seconds=impression_secs),
                         False,
                     )
-                else:  # 'unknown' assigns no window
+                else:
+                    # 'unknown' assigns no window, but it is still a data
+                    # row: like the per-key form, a key WITH state skips
+                    # its timer this batch and re-arms it below; a key
+                    # without state gets none
+                    if k in st_map:
+                        data_keys.add(k)
                     continue
                 data_keys.add(k)
                 ent = st_map.get(k)

@@ -2,14 +2,20 @@
 the corpus parquet and return their final results as a batch DataFrame —
 so the driver's DuckDB oracle can gate streaming execution too.
 
-Pattern: readStream(parquet) → withWatermark → windowed aggregation →
-``foreachBatch`` sink appending update-mode batches (tagged with batch id)
-to a parquet staging dir → availableNow trigger drains the source → read
-staging back and keep each key's LAST update (update mode re-emits the
-accumulated aggregate, so the last row per key IS the final state — this
-is exactly the reference's ACCUMULATING_FIRED_PANES final pane). The
-result is provably equal to the batch query, hence the SAME oracle SQL
-as the batch variant.
+Pattern: readStream(parquet) → withWatermark → stateful operator →
+:func:`~example_beam_spark.streaming.drain.drain` (availableNow trigger,
+one ``batch-<id>`` dir per micro-batch written mode="overwrite") → read
+the batch dirs back. Update-mode aggregations go through
+:func:`run_to_final`, which keeps each key's LAST update (update mode
+re-emits the accumulated aggregate, so the last row per key IS the final
+state — exactly the reference's ACCUMULATING_FIRED_PANES final pane);
+append-mode operators go through :func:`run_to_append`. The result is
+provably equal to the batch query, hence the SAME oracle SQL as the
+batch variant.
+
+The read helpers here only stage and read the source; every drain
+setting (state-store instance count, provider, dirs, progress) belongs
+to ``drain()``. Each entry passes its instance count to the drain.
 
 Scale notes: the staging-parquet + last-update-wins pattern is the
 standard exactly-once upsert sink shape (foreachBatch → MERGE in real
@@ -18,14 +24,13 @@ deployments); nothing is collected on the driver.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from example_beam_spark.operators.ctr import _ctr_oracle
 from example_beam_spark.registry import register
@@ -39,9 +44,14 @@ from example_beam_spark.streaming.ctr_stream import (
     ctr_fixed_window_stream,
     ctr_sliding_window_stream,
 )
+from example_beam_spark.streaming.drain import (
+    batch_dirs,
+    bounded_drain_instances,
+    drain,
+)
 
 
-def _stage_dir(sf_dir: str, name: str, variant: str = "") -> str:
+def stage_dir(sf_dir: str, name: str, variant: str = "") -> str:
     """Spark's streaming file source requires a *directory* (it derives
     basePath from the glob and rejects a bare file), and it lists plain
     files only (a nested directory would be silently skipped). Stage a
@@ -115,198 +125,6 @@ def _staged_files_time_ordered(d: str) -> bool:
     return True
 
 
-def _prepare_stream_session(
-    spark: SparkSession, shuffle_partitions: int | None = None
-) -> None:
-    """Session prep shared by every streaming entry. Besides UTC, size
-    ``spark.sql.shuffle.partitions`` — which fixes the state-store
-    partition count at checkpoint creation — to the available cores: the
-    vanilla 200 multiplies per-micro-batch state-store and Python-worker
-    overhead ~25× on this bounded corpus drain (measured 47 s → 11 s on
-    the lookup-cache join under a default session). At production scale
-    the same knob is sized to state volume, not cores; each entry creates
-    a fresh checkpoint so the setting binds per run.
-
-    The pre-existing value is saved once (module global) and restored by
-    the drain helpers' ``finally`` (:func:`_restore_session`), so batch
-    queries running later in the same session keep their own partition
-    count."""
-    global _SAVED_SHUFFLE, _SAVED_PROVIDER
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if _SAVED_SHUFFLE is None:
-        _SAVED_SHUFFLE = spark.conf.get("spark.sql.shuffle.partitions")
-    # Partition sizing per the tools/drain_tuning.py matrix: state-store
-    # instances (and their per-micro-batch open/commit) scale with this
-    # count. Since r14 every drain passes few instances explicitly
-    # (min(8, cores) for bounded-state drains, cardinality-derived for
-    # the unbounded-key ones — see keyed_drain_instances): store
-    # machinery, not CPU, dominates at corpus scale even for the
-    # Python-stateful kernels. The one exception was the heavy custom
-    # window kernel, which wanted all cores until the r15 bucketed
-    # rewrite collapsed its dispatch count; it now defaults here
-    # (shuffle_partitions=None → cores) with the bucket fan-out
-    # providing the parallelism. EBS_STREAM_SHUFFLE overrides for lane
-    # sweeps; production sizes to state volume, not cores.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get(
-            "EBS_STREAM_SHUFFLE",
-            str(shuffle_partitions or spark.sparkContext.defaultParallelism),
-        ),
-    )
-    # RocksDB state store: state lives off-heap/on-disk, so executor state
-    # volume is bounded by disk, not memory — the provider production runs
-    # at large state. Binds at checkpoint creation (each entry makes a
-    # fresh checkpoint); measured at-least-as-fast as the in-memory
-    # default on the bounded corpus drains. Saved/restored like the
-    # shuffle knob so it never leaks into the consumer's own queries.
-    if _SAVED_PROVIDER is _UNSET:
-        try:
-            _SAVED_PROVIDER = spark.conf.get(_PROVIDER_KEY)
-        except Exception:
-            _SAVED_PROVIDER = None
-    from example_beam_spark.streaming.tws import ROCKSDB_PROVIDER
-
-    # EBS_STATE_PROVIDER=hdfs pins the in-memory HDFS-backed default
-    # instead — the kill/resume suite runs the corpus entries under BOTH
-    # providers (the provider binds at checkpoint creation, so recovery
-    # must be proven per provider).
-    if os.environ.get("EBS_STATE_PROVIDER") == "hdfs":
-        spark.conf.set(_PROVIDER_KEY, _HDFS_PROVIDER)
-    else:
-        spark.conf.set(_PROVIDER_KEY, ROCKSDB_PROVIDER)
-        # Changelog checkpointing: commit a per-batch changelog instead
-        # of uploading full RocksDB SST snapshots every micro-batch
-        # (snapshots continue in the background) — the documented
-        # low-commit-latency mode for RocksDB state stores, and the
-        # right production setting when state mutates a small fraction
-        # per batch. The r14 drain decomposition measured the plain
-        # snapshot-per-commit path 1.5-4 s slower per bounded drain at
-        # 8 store instances (tools/repeat_probe.py). Binds at checkpoint
-        # creation like the provider itself; EBS_ROCKSDB_CHANGELOG=0
-        # restores the snapshot path for lane sweeps.
-        global _SAVED_CHANGELOG
-        if _SAVED_CHANGELOG is _UNSET:
-            try:
-                _SAVED_CHANGELOG = spark.conf.get(_CHANGELOG_KEY)
-            except Exception:
-                _SAVED_CHANGELOG = None
-        _chg = os.environ.get("EBS_ROCKSDB_CHANGELOG", "true").lower()
-        spark.conf.set(
-            _CHANGELOG_KEY,
-            "false" if _chg in ("0", "false", "no") else "true",
-        )
-
-
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-_HDFS_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "HDFSBackedStateStoreProvider"
-)
-_CHANGELOG_KEY = (
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-)
-_UNSET = object()
-_SAVED_SHUFFLE: str | None = None
-_SAVED_PROVIDER: object = _UNSET
-_SAVED_CHANGELOG: object = _UNSET
-
-
-def _restore_session(spark: SparkSession) -> None:
-    """Restore ``spark.sql.shuffle.partitions`` and the state store
-    provider to their pre-streaming values (paired with
-    :func:`_prepare_stream_session`; called from the drain helpers'
-    ``finally`` so the overrides never leak into later batch work in the
-    same session)."""
-    global _SAVED_SHUFFLE, _SAVED_PROVIDER, _SAVED_CHANGELOG
-    if _SAVED_SHUFFLE is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", _SAVED_SHUFFLE)
-        _SAVED_SHUFFLE = None
-    if _SAVED_PROVIDER is not _UNSET:
-        if _SAVED_PROVIDER is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, _SAVED_PROVIDER)
-        _SAVED_PROVIDER = _UNSET
-    if _SAVED_CHANGELOG is not _UNSET:
-        if _SAVED_CHANGELOG is None:
-            spark.conf.unset(_CHANGELOG_KEY)
-        else:
-            spark.conf.set(_CHANGELOG_KEY, _SAVED_CHANGELOG)
-        _SAVED_CHANGELOG = _UNSET
-
-
-# Per-micro-batch StreamingQueryProgress dicts of the LAST drained query
-# (run_to_final / run_to_append overwrite it per drain). The state-size
-# lane (tools/multibatch.py) and tests/test_state_metrics.py read the
-# `stateOperators` entries (numRowsTotal / numRowsUpdated /
-# numRowsRemoved / numRowsDroppedByWatermark) to turn the bounded-state
-# design claims into per-batch MEASUREMENTS — eviction observed, not
-# argued. Negligible cost: availableNow drains keep <100 progress
-# objects and the capture is a driver-side JSON parse.
-LAST_PROGRESS: list[dict] = []
-
-# Test-harness knobs for the kill/resume suite
-# (tests/test_multibatch_resume.py): when set, the drain helpers reuse
-# the given sink/checkpoint dirs across entry invocations (so a second
-# call RESUMES the availableNow drain from the checkpoint instead of
-# starting fresh) and inject a failure — the foreachBatch sink raises
-# BEFORE writing when its batch id reaches ``fail_at_batch``, the
-# mid-flight crash Structured Streaming's restart contract must absorb.
-# Empty in every production / registered-query path.
-DRAIN_OVERRIDES: dict = {}
-
-
-def _drain_dirs(kind: str) -> tuple[str, str, bool]:
-    out_dir = DRAIN_OVERRIDES.get("out_dir") or tempfile.mkdtemp(
-        prefix=f"stream_{kind}_"
-    )
-    keep_ckpt = "ckpt" in DRAIN_OVERRIDES
-    ckpt = DRAIN_OVERRIDES.get("ckpt") or tempfile.mkdtemp(prefix="stream_ckpt_")
-    return out_dir, ckpt, keep_ckpt
-
-
-def _maybe_fail(bid: int) -> None:
-    fail_at = DRAIN_OVERRIDES.get("fail_at_batch")
-    if fail_at is not None and bid == fail_at:
-        raise RuntimeError(f"injected sink failure at batch {bid}")
-
-
-def _capture_progress(q) -> None:
-    global LAST_PROGRESS
-    try:
-        import json as _json
-
-        LAST_PROGRESS = [
-            p if isinstance(p, dict) else _json.loads(p.json)
-            for p in q.recentProgress
-        ]
-    except Exception:
-        LAST_PROGRESS = []
-
-
-def state_rows_series(progress: list[dict] | None = None) -> list[dict]:
-    """Summarize a drained query's per-batch state-store metrics: one
-    dict per micro-batch with total state rows, rows updated/removed and
-    rows dropped by the watermark, summed across stateful operators."""
-    out = []
-    for p in progress if progress is not None else LAST_PROGRESS:
-        ops = p.get("stateOperators") or []
-        out.append(
-            {
-                "batch": p.get("batchId"),
-                "input_rows": p.get("numInputRows"),
-                "state_rows": sum(o.get("numRowsTotal", 0) for o in ops),
-                "updated": sum(o.get("numRowsUpdated", 0) for o in ops),
-                "removed": sum(o.get("numRowsRemoved", 0) for o in ops),
-                "dropped_late": sum(
-                    o.get("numRowsDroppedByWatermark", 0) for o in ops
-                ),
-            }
-        )
-    return out
-
-
 # Distinct-key estimates per (sf_dir, column, source fingerprint) — one
 # approx_count_distinct job per session per corpus layout, shared by all
 # unbounded-key drains (invalidated by any fixture regeneration).
@@ -329,10 +147,8 @@ def keyed_drain_instances(
     the measured 8-instance floor dominates (identical sf0.1 numbers);
     at production key volumes the count grows with state so neither
     per-instance memory nor state parallelism is capped by a local-mode
-    constant. EBS_STREAM_SHUFFLE still overrides downstream (the
-    estimate feeds shuffle_partitions via _prepare_stream_session,
-    whose env override wins). The estimate is one approx_count_distinct
-    job, cached per (sf_dir, column, source fingerprint)."""
+    constant. The estimate is one approx_count_distinct job, cached per
+    (sf_dir, column, source fingerprint)."""
     from example_beam_spark.sources import load_table
 
     members = parquet_members(table_path(sf_dir, "events"))
@@ -353,21 +169,18 @@ def keyed_drain_instances(
             .collect()[0][0]
         )
         _KEY_EST_CACHE[key] = est
-    floor = min(8, spark.sparkContext.defaultParallelism)
-    return max(floor, -(-est // _KEYS_PER_INSTANCE))
+    return max(bounded_drain_instances(spark), -(-est // _KEYS_PER_INSTANCE))
 
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = None
-) -> DataFrame:
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming read of the events table — the footer-negotiated encoding
     branch (ns shim vs native TimestampType) is picked BEFORE building the
-    readStream schema, so batch and streaming reads cannot drift.
-    ``shuffle_partitions`` sizes the state-store instance count for this
-    drain (see _prepare_stream_session)."""
-    _prepare_stream_session(spark, shuffle_partitions)
+    readStream schema, so batch and streaming reads cannot drift. Pins
+    the session to UTC like load_table (event-time expressions resolve
+    their time zone when the plan is built)."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema, shim = events_read_schema(spark, sf_dir)
-    d = _stage_dir(sf_dir, "events")
+    d = stage_dir(sf_dir, "events")
     reader = spark.readStream.schema(schema)
     # One file per micro-batch — a no-op for the standard single-file
     # fixture, but it makes the multi-chunk convergence lane
@@ -386,40 +199,43 @@ def read_events_stream(
 
 
 def run_to_final(
-    agg: DataFrame, key_cols: list[str], spark: SparkSession
+    agg: DataFrame, key_cols: list[str], spark: SparkSession, *, instances: int
 ) -> DataFrame:
-    """Drain a streaming aggregation with availableNow + update-mode
-    foreachBatch into staging parquet; return last-update-per-key."""
-    out_dir, ckpt, keep_ckpt = _drain_dirs("out")
+    """Drain a streaming aggregation in update mode; return the
+    last update per key (each batch's rows carry its ``_batch`` id)."""
 
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _maybe_fail(bid)
-        bdf.withColumn("_batch", F.lit(bid)).write.mode("append").parquet(out_dir)
+    def write_batch(bdf: DataFrame, bid: int, path: str) -> None:
+        bdf.withColumn("_batch", F.lit(bid)).write.mode("overwrite").parquet(path)
 
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _capture_progress(q)
-    finally:
-        _restore_session(spark)
-    out = spark.read.parquet(out_dir)
+    out = _read_batches(
+        spark,
+        drain(agg, instances=instances, output_mode="update", write_batch=write_batch),
+        T.StructType([*agg.schema.fields, T.StructField("_batch", T.IntegerType())]),
+    )
     w = Window.partitionBy(*key_cols).orderBy(F.desc("_batch"))
-    final = (
+    return (
         out.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_batch")
     )
-    # staging dirs are left for the consumer's lifetime (tmp space); the
-    # returned DataFrame lazily re-reads them on every action.
-    if not keep_ckpt:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return final
+
+
+def run_to_append(agg: DataFrame, spark: SparkSession, *, instances: int) -> DataFrame:
+    """Drain an append-mode stateful streaming query; return everything
+    appended. Exactly-once under micro-batch replay through drain()'s
+    per-batch-id overwrite (pinned by tests/test_drain.py)."""
+    return _read_batches(
+        spark, drain(agg, instances=instances, output_mode="append"), agg.schema
+    )
+
+
+def _read_batches(spark: SparkSession, out_dir: str, schema: T.StructType) -> DataFrame:
+    # the batch dirs stay for the consumer's lifetime (tmp space); the
+    # returned DataFrame lazily re-reads them on every action
+    dirs = batch_dirs(out_dir)
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(*dirs)
 
 
 @register("ctr_fixed_capped_stream", oracle=_ctr_oracle(3600, capped=True))
@@ -428,13 +244,10 @@ def ctr_fixed_capped_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed aggregation, watermark, update mode) — final state equals the
     batch ctr_fixed_capped result, gated by the same oracle."""
     # JVM windowed agg on a bounded drain: store machinery dominates, so
-    # few instances win (r14 interleaved A/B, tools/drain_sizing_ab.py:
+    # few instances win (r14 interleaved A/B, OPTIMIZATION_r14.md §3:
     # 2.9 s at 32 -> 1.65 s at 8; rows identical) — same conclusion as
     # the r10 matrix for the stream-stream join and session window
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream(spark, sf_dir).withColumnRenamed("ts", "event_time")
     ev = ev.filter(F.col("event_type").isin("click", "view")).select(
         "user_id",
         "event_time",
@@ -443,7 +256,10 @@ def ctr_fixed_capped_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev = ev.withWatermark("event_time", "1 hour")
     agg = ctr_fixed_window_stream(ev, keys=["user_id"], window_duration="1 hour", capped=True)
-    return run_to_final(agg, ["user_id", "window_start"], spark)
+    return run_to_final(
+        agg, ["user_id", "window_start"], spark,
+        instances=bounded_drain_instances(spark),
+    )
 
 
 @register("ctr_sliding_total_stream", oracle=_ctr_oracle(7200, capped=False, slide_sec=3600))
@@ -455,10 +271,7 @@ def ctr_sliding_total_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, evicted by the watermark. Final state equals the batch
     ctr_sliding_total, gated by the same oracle."""
     # same store-machinery profile as ctr_fixed_capped_stream (A/B above)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream(spark, sf_dir).withColumnRenamed("ts", "event_time")
     ev = ev.filter(F.col("event_type").isin("click", "view")).select(
         "user_id",
         "event_time",
@@ -469,7 +282,10 @@ def ctr_sliding_total_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ctr_sliding_window_stream(
         ev, keys=["user_id"], window_duration="2 hours", slide="1 hour"
     )
-    return run_to_final(agg, ["user_id", "window_start"], spark)
+    return run_to_final(
+        agg, ["user_id", "window_start"], spark,
+        instances=bounded_drain_instances(spark),
+    )
 
 
 @register(
@@ -494,14 +310,14 @@ def dedup_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # dedup StateStore drain: few instances win (r14 A/B on the
     # within-watermark sibling: 2.35 s at 32 -> 1.56 s at 8)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).select("user_id", "event_type")
+    ev = read_events_stream(spark, sf_dir).select("user_id", "event_type")
     distinct = ev.dropDuplicates(["user_id", "event_type"]).withColumn(
         "seen", F.lit(1).cast("long")
     )
-    return run_to_final(distinct, ["user_id", "event_type"], spark)
+    return run_to_final(
+        distinct, ["user_id", "event_type"], spark,
+        instances=bounded_drain_instances(spark),
+    )
 
 
 @register(
@@ -535,11 +351,8 @@ def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     pinned by a replay test
     (tests/test_streaming.py::test_drop_duplicates_within_watermark_evicts_state).
     """
-    # r14 A/B (tools/drain_sizing_ab.py): 2.35 s at 32 -> 1.56 s at 8
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).select(
+    # r14 A/B (OPTIMIZATION_r14.md §3): 2.35 s at 32 -> 1.56 s at 8
+    ev = read_events_stream(spark, sf_dir).select(
         "user_id",
         "event_type",
         F.date_trunc("hour", F.col("ts")).alias("hour_bucket"),
@@ -548,57 +361,7 @@ def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     dd = ev.dropDuplicatesWithinWatermark(
         ["user_id", "event_type", "hour_bucket"]
     ).withColumn("seen", F.lit(1).cast("long"))
-    return run_to_append(dd, spark)
-
-
-def _batch_overwrite_sink(out_dir: str):
-    """foreachBatch delivery for :func:`run_to_append`: mode="overwrite"
-    into a per-batch subdir, so redelivery of the same batch id (Spark's
-    at-least-once contract after a mid-batch failure) replaces that
-    batch's output — including any partial files a killed first attempt
-    left — instead of appending a duplicate copy."""
-
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _maybe_fail(bid)
-        bdf.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch-{bid:09d}")
-        )
-
-    return sink
-
-
-def run_to_append(agg: DataFrame, spark: SparkSession) -> DataFrame:
-    """Drain an append-mode stateful streaming query (availableNow) into
-    staging parquet and return everything appended.
-
-    Idempotent under micro-batch replay (the same contract the Avro
-    streaming sink implements with batch-id file prefixes): each batch
-    writes mode="overwrite" into its own ``batch-<id>`` subdir, so a
-    batch re-delivered after a mid-batch failure REPLACES its own output
-    instead of appending a second copy — foreachBatch is at-least-once
-    per batch id; the sink must be idempotent per batch id to get
-    exactly-once (pinned by tests/test_streaming.py::
-    test_run_to_append_idempotent_under_batch_replay)."""
-    out_dir, ckpt, keep_ckpt = _drain_dirs("out")
-    sink = _batch_overwrite_sink(out_dir)
-    try:
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _capture_progress(q)
-    finally:
-        _restore_session(spark)
-    if not keep_ckpt:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    batch_dirs = sorted(glob.glob(os.path.join(glob.escape(out_dir), "batch-*")))
-    if not batch_dirs:
-        return spark.createDataFrame([], agg.schema)
-    return spark.read.parquet(*batch_dirs)
+    return run_to_append(dd, spark, instances=bounded_drain_instances(spark))
 
 
 # Converged lookup-cache semantics over the corpus (see the query
@@ -679,14 +442,13 @@ def lookup_cache_join_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # moderate Python-stateful kernel: few store instances still win
-    # (r14 interleaved A/B, tools/drain_sizing_ab.py: 9.4/13.5 s at 32
+    # (r14 interleaved A/B, OPTIMIZATION_r14.md §3: 9.4/13.5 s at 32
     # -> 7.2/8.8 s at 8; rows identical). UNBOUNDED per-user state, so
     # the count derives from estimated key cardinality (r15 — the 8
     # floor at corpus scale, growing with keys at production volume)
-    ev = read_events_stream_flushed(
-        spark, sf_dir,
-        shuffle_partitions=keyed_drain_instances(spark, sf_dir),
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream_flushed(spark, sf_dir).withColumnRenamed(
+        "ts", "event_time"
+    )
     ev = ev.withWatermark("event_time", "1 hour")
     # drop sentinels AFTER the watermark node (unsplittable CASE predicate)
     union = ev.filter(
@@ -702,7 +464,9 @@ def lookup_cache_join_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_time",
     )
     joined = lookup_cache_join_stream(union, ttl_seconds=24 * 3600)
-    return run_to_append(joined, spark)
+    return run_to_append(
+        joined, spark, instances=keyed_drain_instances(spark, sf_dir)
+    )
 
 
 # Converged custom-window semantics over the corpus (see the query
@@ -786,7 +550,12 @@ def ctr_custom_window_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_time",
     )
     out = ad_ctr_custom_window_stream(ads, 600, 60)
-    return run_to_append(out, spark)
+    # all cores: the bucket fan-out of the heavy Python kernel provides
+    # the parallelism (NOTES.md "streaming drain tuning matrix": 8
+    # partitions doubled the per-key kernel's wall)
+    return run_to_append(
+        out, spark, instances=spark.sparkContext.defaultParallelism
+    )
 
 
 _SENTINEL_USER = -1
@@ -794,9 +563,7 @@ _SENTINEL_USER = -1
 _SENTINEL_TS_SECONDS = 4102444800
 
 
-def read_events_stream_flushed(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = None
-) -> DataFrame:
+def read_events_stream_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Like :func:`read_events_stream`, but the staging dir also carries a
     far-future *sentinel* event (user_id = -1, ts = year 2100). Session
     windows only support append output, which emits a session when the
@@ -806,9 +573,9 @@ def read_events_stream_flushed(
     watermark past everything; availableNow's multi-batch executor then
     runs the extra flush batch. Callers must drop sentinel rows AFTER
     withWatermark (unsplittable CASE predicate — see harness module doc)."""
-    _prepare_stream_session(spark, shuffle_partitions)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema, shim = events_read_schema(spark, sf_dir)
-    d = _stage_dir(sf_dir, "events", variant="+sentinel")
+    d = stage_dir(sf_dir, "events", variant="+sentinel")
     # TWO sentinel files at increasing times, read as separate micro-batches
     # (maxFilesPerTrigger=1): a watermark update only takes effect at the
     # NEXT batch, and stateful operators (outer joins especially) evict and
@@ -884,23 +651,11 @@ def read_events_stream_flushed(
     #   happens in Spark's post-watermark no-data micro-batch
     #   (noDataMicroBatches, default true) — the same mechanism the
     #   pre-r15 unordered path already relied on — so the drain is
-    #   2 micro-batches instead of 4. Assert the knob so a session that
-    #   disabled it fails loudly here, not with stranded state.
+    #   2 micro-batches instead of 4. drain() pins noDataMicroBatches on
+    #   inside its conf scope, so a session that disabled it still
+    #   flushes.
     ordered = _staged_files_time_ordered(d)
-    if ordered and n_members > 1:
-        trigger_files = 1
-    else:
-        assert (
-            spark.conf.get(
-                "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-            ).lower()
-            == "true"
-        ), (
-            "collapsed staging schedule: final sentinel flush depends on "
-            "the post-watermark no-data micro-batch, but "
-            "spark.sql.streaming.noDataMicroBatches.enabled is false"
-        )
-        trigger_files = n_members + 2
+    trigger_files = 1 if ordered and n_members > 1 else n_members + 2
     df = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", trigger_files)
@@ -913,16 +668,17 @@ def stream_join_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The clicks⋈views streaming join graph shared by
     enrich_stream_stream_join and the DLQ-fork twin
     (streaming/join_dlq_stream.py): one watermark node, CASE-filter
-    side fork, time-range left-outer join."""
+    side fork, time-range left-outer join. Its drains use
+    bounded_drain_instances: JVM-stateful, so store machinery, not CPU,
+    is the cost — 8 store instances measured 12.9 → 4.6 s (NOTES.md
+    "streaming drain tuning matrix")."""
     from example_beam_spark.streaming.join_stream import (
         stream_stream_time_range_join,
     )
 
-    # JVM-stateful drain: store machinery, not CPU, is the cost — 8
-    # store instances measured 12.9 → 4.6 s (tools/drain_tuning.py)
-    ev = read_events_stream_flushed(
-        spark, sf_dir, shuffle_partitions=min(8, spark.sparkContext.defaultParallelism)
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream_flushed(spark, sf_dir).withColumnRenamed(
+        "ts", "event_time"
+    )
     # ONE shared watermark node, then watermark-anchored CASE filters fork
     # the two sides. Two separate withWatermark calls would create two
     # watermark operators whose maxes must BOTH advance for the global
@@ -968,7 +724,7 @@ def enrich_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch enrich_time_range_join: after the sentinel drains the watermark,
     the streaming result equals the batch join."""
     joined = stream_join_graph(spark, sf_dir)
-    out = run_to_append(joined, spark)
+    out = run_to_append(joined, spark, instances=bounded_drain_instances(spark))
     return out.select(
         "event_id",
         "user_id",
@@ -1014,11 +770,9 @@ def sessionize_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     two events exactly gap apart start a NEW session (windows [t, t+gap)
     merge only when they properly overlap), hence the >= in the oracle's
     session-break predicate."""
-    # JVM-stateful drain: 8 store instances measured 5.0 → 2.5 s
-    # (tools/drain_tuning.py; same reasoning as enrich_stream_stream_join)
-    ev = read_events_stream_flushed(
-        spark, sf_dir, shuffle_partitions=min(8, spark.sparkContext.defaultParallelism)
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream_flushed(spark, sf_dir).withColumnRenamed(
+        "ts", "event_time"
+    )
     ev = ev.withWatermark("event_time", "1 hour")
     # Drop the sentinel AFTER the watermark node; the CASE-shaped predicate
     # is watermark-anchored so Catalyst can't push it below EventTimeWatermark.
@@ -1038,7 +792,9 @@ def sessionize_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "last_event_time",
     )
-    return run_to_append(out, spark)
+    # JVM-stateful drain: 8 store instances measured 5.0 → 2.5 s (NOTES.md
+    # "streaming drain tuning matrix"; same reasoning as the stream join)
+    return run_to_append(out, spark, instances=bounded_drain_instances(spark))
 
 
 # --------------------------------------------------------------------------
@@ -1067,11 +823,8 @@ def events_weekly_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from example_beam_spark.sources import load_table
 
     # weeks × types JVM windowed agg: store machinery dominates (r14 A/B,
-    # tools/drain_sizing_ab.py: 1.61 s at 32 -> 1.16 s at 8; rows identical)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    )
+    # OPTIMIZATION_r14.md §3: 1.61 s at 32 -> 1.16 s at 8; rows identical)
+    ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.select(
             F.date_trunc("week", F.col("ts")).cast("date").alias("week"),
@@ -1080,7 +833,10 @@ def events_weekly_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("week", "event_type")
         .agg(F.count("*").cast("long").alias("n_wt"))
     )
-    weekly = run_to_final(agg, ["week", "event_type"], spark).select(
+    weekly = run_to_final(
+        agg, ["week", "event_type"], spark,
+        instances=bounded_drain_instances(spark),
+    ).select(
         "week", "event_type", "n_wt"
     )
     return drift_from_weekly(weekly, load_table(spark, sf_dir, "events"))
@@ -1107,18 +863,18 @@ def events_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from example_beam_spark.streaming.funnel_stream import funnel_stream
 
     # per-user Python-stateful kernel, light rows: few instances still win
-    # (r14 A/B, tools/drain_sizing_ab.py: 1.94 s at 32 -> 1.76 s at 8).
+    # (r14 A/B, OPTIMIZATION_r14.md §3: 1.94 s at 32 -> 1.76 s at 8).
     # UNBOUNDED per-user state — instance count derives from estimated
     # key cardinality (r15): the 8 floor at corpus scale, growing with
     # keys at production volume.
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=keyed_drain_instances(spark, sf_dir),
-    )
+    ev = read_events_stream(spark, sf_dir)
     keyed = ev.select(
         "user_id", F.col("ts").alias("event_time"), "event_type"
     )
-    per_user = run_to_final(funnel_stream(keyed), ["user_id"], spark)
+    per_user = run_to_final(
+        funnel_stream(keyed), ["user_id"], spark,
+        instances=keyed_drain_instances(spark, sf_dir),
+    )
     return per_user.agg(
         F.count("*").cast("long").alias("n_users"),
         F.count("s1").cast("long").alias("n_signup"),

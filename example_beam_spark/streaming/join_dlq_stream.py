@@ -15,9 +15,9 @@ happens at the SINK, the production two-output discipline: ONE
 streaming query, one pass over the join state, and each micro-batch
 splits into a matched destination and a DLQ destination
 (streaming/join_stream.py:split_matched — the P6/J6 helper — applied
-per batch inside foreachBatch). Delivery keeps run_to_append's
-idempotence contract: both destinations live under a per-batch-id
-directory written mode="overwrite", so a batch redelivered after a
+per batch inside foreachBatch). Delivery keeps drain()'s idempotence
+contract: both destinations live under the per-batch-id directory
+written mode="overwrite", so a batch redelivered after a
 mid-batch crash replaces BOTH sides instead of appending duplicates
 (exactly-once across kill/resume — pinned in
 tests/test_multibatch_resume.py).
@@ -39,14 +39,18 @@ single-query two-sink form is the one that survives 100 TB/day.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from example_beam_spark.registry import register
+from example_beam_spark.streaming.drain import (
+    batch_dirs,
+    bounded_drain_instances,
+    drain,
+)
 
 _JOIN_DLQ_ORACLE = """
     SELECT c.event_id, c.user_id, c.ts,
@@ -62,68 +66,48 @@ _JOIN_DLQ_ORACLE = """
 """
 
 
-def _fork_sink(out_dir: str):
-    """foreachBatch delivery with the two-output fork: per batch id,
-    matched rows and DLQ rows land in sibling subdirs under one
-    batch-<id> directory, both mode="overwrite" (idempotent replay —
-    the run_to_append contract, per side)."""
-    from example_beam_spark.streaming.entries import _maybe_fail
+def _fork_batch(bdf: DataFrame, bid: int, root: str) -> None:
+    """Two-output fork of one micro-batch: matched rows and DLQ rows land
+    in sibling subdirs of the batch-<id> directory, both
+    mode="overwrite" (idempotent replay, per side)."""
     from example_beam_spark.streaming.join_stream import split_matched
 
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _maybe_fail(bid)
-        # Persist the delivered micro-batch ONCE: without it, each side's
-        # write re-executes the batch's join plan from the state store —
-        # the two-sink fork paid the upstream work twice (guide §2.4
-        # "don't compute things twice"; r15 sweep showed the DLQ entry
-        # +2.6 s over the single-sink join). The persist/unpersist pair
-        # is batch-scoped, inside the foreachBatch delivery — standard
-        # multi-sink discipline, not a cross-run cache.
-        bdf.persist()
-        try:
-            matched, dlq = split_matched(bdf, "view_event_id")
-            root = os.path.join(out_dir, f"batch-{bid:09d}")
-            matched.withColumn("side", F.lit("matched")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, "matched"))
-            dlq.withColumn("side", F.lit("dlq")).write.mode("overwrite").parquet(
-                os.path.join(root, "dlq")
-            )
-        finally:
-            bdf.unpersist()
-
-    return sink
+    # Persist the delivered micro-batch ONCE: without it, each side's
+    # write re-executes the batch's join plan from the state store —
+    # the two-sink fork paid the upstream work twice (guide §2.4
+    # "don't compute things twice"; r15 sweep showed the DLQ entry
+    # +2.6 s over the single-sink join). The persist/unpersist pair
+    # is batch-scoped, inside the foreachBatch delivery — standard
+    # multi-sink discipline, not a cross-run cache.
+    bdf.persist()
+    try:
+        matched, dlq = split_matched(bdf, "view_event_id")
+        matched.withColumn("side", F.lit("matched")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(root, "matched"))
+        dlq.withColumn("side", F.lit("dlq")).write.mode("overwrite").parquet(
+            os.path.join(root, "dlq")
+        )
+    finally:
+        bdf.unpersist()
 
 
 def run_to_fork(joined: DataFrame, spark: SparkSession) -> DataFrame:
     """Drain the streaming join through the two-sink fork and return
     the union of both destinations (side column tags the origin)."""
-    from example_beam_spark.streaming.entries import (
-        _capture_progress,
-        _drain_dirs,
-        _restore_session,
+    out_dir = drain(
+        joined,
+        instances=bounded_drain_instances(spark),
+        output_mode="append",
+        write_batch=_fork_batch,
     )
-
-    out_dir, ckpt, keep_ckpt = _drain_dirs("fork")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(_fork_sink(out_dir))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _capture_progress(q)
-    finally:
-        _restore_session(spark)
-    if not keep_ckpt:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    side_dirs = sorted(
-        glob.glob(os.path.join(glob.escape(out_dir), "batch-*", "*"))
-    )
+    side_dirs = [
+        os.path.join(b, side) for b in batch_dirs(out_dir) for side in ("dlq", "matched")
+    ]
     if not side_dirs:
-        schema = joined.schema.add("side", "string")
+        schema = T.StructType(
+            [*joined.schema.fields, T.StructField("side", T.StringType())]
+        )
         return spark.createDataFrame([], schema)
     return spark.read.parquet(*side_dirs)
 

@@ -116,14 +116,6 @@ def _vector_stream(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     time-sorted parquet with the derived arrival clock."""
     import time
 
-    from example_beam_spark.streaming.entries import _prepare_stream_session
-
-    # size the state-store instance count for this drain (the Python
-    # kernel is trivial — id/ts list appends — so store machinery
-    # dominates, same profile as the repeat stream: few instances win)
-    _prepare_stream_session(
-        spark, min(8, spark.sparkContext.defaultParallelism)
-    )
     n_chunks = max(1, int(os.environ.get(_VECTOR_CHUNKS_ENV, "1")))
     key = (os.path.abspath(sf_dir), n_chunks, _source_fingerprint(sf_dir))
     d = _STAGE_CACHE.get(key)
@@ -279,6 +271,7 @@ def embedding_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-side on the drained candidates. Output matches the batch
     operator's (vec_a, vec_b, n_bands, cosine), restricted to pairs
     arriving within the TTL window."""
+    from example_beam_spark.streaming.drain import bounded_drain_instances
     from example_beam_spark.streaming.entries import run_to_append
 
     stream, n_rows = _vector_stream(spark, sf_dir)
@@ -291,7 +284,13 @@ def embedding_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts_us",
         F.posexplode(band_keys_array(r, n_rows)).alias("band", "bkey"),
     )
-    pairs = run_to_append(_apply_bucket_kernel(banded), spark)
+    # the Python kernel is trivial (id/ts list appends), so store
+    # machinery dominates, same profile as the repeat stream: few
+    # instances win
+    pairs = run_to_append(
+        _apply_bucket_kernel(banded), spark,
+        instances=bounded_drain_instances(spark),
+    )
     agg = pairs.groupBy("vec_a", "vec_b").agg(
         F.count("*").cast("long").alias("n_bands")
     )

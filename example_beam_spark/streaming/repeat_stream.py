@@ -359,25 +359,27 @@ def enrich_repeat_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     RepeatDoFn.scala:60-114): every initial AND per-interval re-emission
     with its exact emission timestamp, value-compared against the
     recursive chain oracle."""
+    from example_beam_spark.streaming.drain import bounded_drain_instances
     from example_beam_spark.streaming.entries import (
         read_events_stream_flushed,
         run_to_append,
     )
 
-    # light Python-stateful drain (4 scalars/key, trivial kernel): store
-    # machinery dominates like the JVM-stateful drains, and the r10
-    # tuning matrix measured 8 store instances at 5.7 s vs 6.4 s at 32
-    # (tools/drain_tuning.py --entries enrich_repeat_stream; rows agree
-    # across all cells) — unlike the heavy custom-window kernel, which
-    # needs all cores
-    ev = read_events_stream_flushed(
-        spark,
-        sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream_flushed(spark, sf_dir).withColumnRenamed(
+        "ts", "event_time"
+    )
     ev = ev.withWatermark("event_time", "1 hour")
     # drop sentinels AFTER the watermark node (unsplittable CASE predicate)
     elements = ev.filter(
         F.when(F.col("event_type") == "signup", F.col("event_time")).isNotNull()
     ).select("user_id", "event_time", "event_id", "value")
-    return run_to_append(repeat_latest_stream(elements), spark)
+    # light Python-stateful drain (4 scalars/key, trivial kernel): store
+    # machinery dominates like the JVM-stateful drains, and the r10
+    # tuning matrix measured 8 store instances at 5.7 s vs 6.4 s at 32
+    # (NOTES.md "repeat-stream drain sizing"; rows agree across all
+    # cells) — unlike the heavy custom-window kernel, which needs all
+    # cores
+    return run_to_append(
+        repeat_latest_stream(elements), spark,
+        instances=bounded_drain_instances(spark),
+    )

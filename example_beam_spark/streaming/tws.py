@@ -53,11 +53,6 @@ from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from example_beam_spark.streaming import custom_window as _cw
 from example_beam_spark.streaming import lookup_cache as _lc
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 def stateful_impl(impl: str | None = None) -> str:
     """Resolve the stateful-operator implementation flag. 'bucketed' is
     the custom window's hash-bucketed gsts variant; entries without a

@@ -106,7 +106,9 @@ def test_flushed_stream_on_directory_layout(spark, tmp_path, unit):
 
     sf_dir = _write_events_dir(tmp_path, unit)
     ev = read_events_stream_flushed(spark, sf_dir).select("event_id", "user_id")
-    out = run_to_append(ev, spark).collect()
+    out = run_to_append(
+        ev, spark, instances=spark.sparkContext.defaultParallelism
+    ).collect()
     sentinels = [r for r in out if r["user_id"] == _SENTINEL_USER]
     assert len(sentinels) == 2
     assert len(out) == 60 + 2

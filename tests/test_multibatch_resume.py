@@ -7,7 +7,7 @@ uninterrupted run bit-for-bit — Structured Streaming's exactly-once
 restart contract on the real entries, not a toy aggregation
 (tests/test_checkpoint_resume.py covers the simple-agg case). Run under
 both state-store providers (RocksDB default; in-memory HDFS-backed via
-EBS_STATE_PROVIDER) — the provider binds at checkpoint creation.
+drain.TEST_HOOK["provider"]) — the provider binds at checkpoint creation.
 """
 
 from __future__ import annotations
@@ -41,7 +41,7 @@ ENTRIES = [
     "lookup_cache_join_stream",
     "ctr_custom_window_stream",
     # O(1)-state append-mode entry: the replayed batch must OVERWRITE
-    # its own pair output (run_to_append's batch-id contract) and the
+    # its own pair output (drain()'s batch-id contract) and the
     # last-event state must restore so the boundary pair is not doubled
     "events_markov_stream",
     # timer-grid entry: the crash lands with live chains (next_tick +
@@ -73,9 +73,8 @@ def _canon_rows(df):
 
 
 def _kill_resume(spark, chunked, name, fail_at=4):
-    from example_beam_spark import streaming
     from example_beam_spark.registry import load_registry
-    from example_beam_spark.streaming import entries as E
+    from example_beam_spark.streaming import drain as D
 
     reg = load_registry()
 
@@ -84,7 +83,7 @@ def _kill_resume(spark, chunked, name, fail_at=4):
 
     out_dir = tempfile.mkdtemp(prefix=f"resume_out_{name}_")
     ckpt = tempfile.mkdtemp(prefix=f"resume_ckpt_{name}_")
-    E.DRAIN_OVERRIDES.update(
+    D.TEST_HOOK.update(
         {"out_dir": out_dir, "ckpt": ckpt, "fail_at_batch": fail_at}
     )
     try:
@@ -92,10 +91,11 @@ def _kill_resume(spark, chunked, name, fail_at=4):
             reg[name].fn(spark, chunked).collect()
         # crash absorbed: clear the fault, keep the dirs, re-invoke —
         # the drain resumes from the checkpoint and replays batch k
-        E.DRAIN_OVERRIDES.pop("fail_at_batch")
+        D.TEST_HOOK.pop("fail_at_batch")
         resumed = _canon_rows(reg[name].fn(spark, chunked))
     finally:
-        E.DRAIN_OVERRIDES.clear()
+        for k in ("out_dir", "ckpt", "fail_at_batch"):
+            D.TEST_HOOK.pop(k, None)
     assert resumed == baseline, (
         f"{name}: resumed-from-checkpoint output differs from the "
         f"uninterrupted run ({len(resumed)} vs {len(baseline)} rows)"
@@ -117,5 +117,12 @@ def test_kill_resume_hdfs_provider(spark, chunked, monkeypatch):
     """Same contract under the in-memory HDFS-backed provider (the
     RocksDB runs above are the production-sizing path; the default
     provider must recover identically)."""
-    monkeypatch.setenv("EBS_STATE_PROVIDER", "hdfs")
+    from example_beam_spark.streaming import drain as D
+
+    monkeypatch.setitem(
+        D.TEST_HOOK,
+        "provider",
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider",
+    )
     _kill_resume(spark, chunked, "sessionize_events_stream")

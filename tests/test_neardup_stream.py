@@ -152,6 +152,7 @@ def test_two_microbatch_drain_equals_single(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from example_beam_spark.streaming.drain import bounded_drain_instances
     from example_beam_spark.streaming.entries import run_to_append
     from example_beam_spark.streaming.neardup_stream import (
         _BASE_TS_SECONDS,
@@ -208,7 +209,10 @@ def test_two_microbatch_drain_equals_single(spark, tmp_path):
     banded = stream.select(
         "vec_id", "ts_us", F.posexplode(band_keys_array(r, 0)).alias("band", "bkey")
     )
-    pairs = run_to_append(_apply_bucket_kernel(banded), spark)
+    pairs = run_to_append(
+        _apply_bucket_kernel(banded), spark,
+        instances=bounded_drain_instances(spark),
+    )
     # candidate-level comparison is enough here (verify stage is a pure
     # batch function of the candidates): per-(band, pair) sets equal
     two = sorted(tuple(r) for r in pairs.distinct().collect())
@@ -221,7 +225,10 @@ def test_two_microbatch_drain_equals_single(spark, tmp_path):
     )
     one = sorted(
         tuple(r)
-        for r in run_to_append(_apply_bucket_kernel(banded1), spark)
+        for r in run_to_append(
+            _apply_bucket_kernel(banded1), spark,
+            instances=bounded_drain_instances(spark),
+        )
         .distinct()
         .collect()
     )
@@ -257,7 +264,7 @@ def test_kill_resume_matches_uninterrupted(spark, monkeypatch):
 
     import pytest as _pytest
 
-    from example_beam_spark.streaming import entries as E
+    from example_beam_spark.streaming import drain as D
 
     sf = "/root/testdata/sf0.001"
     monkeypatch.setenv("EBS_VECTOR_CHUNKS", "5")
@@ -266,18 +273,18 @@ def test_kill_resume_matches_uninterrupted(spark, monkeypatch):
     )
     out_dir = tempfile.mkdtemp(prefix="resume_out_ndstream_")
     ckpt = tempfile.mkdtemp(prefix="resume_ckpt_ndstream_")
-    E.DRAIN_OVERRIDES.update(
+    D.TEST_HOOK.update(
         {"out_dir": out_dir, "ckpt": ckpt, "fail_at_batch": 3}
     )
     try:
         with _pytest.raises(Exception, match="injected sink failure"):
             embedding_neardup_stream(spark, sf).collect()
-        E.DRAIN_OVERRIDES.pop("fail_at_batch")
+        D.TEST_HOOK.pop("fail_at_batch")
         resumed = sorted(
             tuple(r) for r in embedding_neardup_stream(spark, sf).collect()
         )
     finally:
-        E.DRAIN_OVERRIDES.clear()
+        D.TEST_HOOK.clear()
     assert resumed == baseline
 
 
@@ -296,7 +303,7 @@ def test_idle_bucket_gc_bounds_state(spark, monkeypatch):
         neardup_band_bits,
     )
     from example_beam_spark.sources import load_table
-    from example_beam_spark.streaming import entries as E
+    from example_beam_spark.streaming.drain import state_rows_series
     from example_beam_spark.streaming.neardup_stream import (
         NEARDUP_STREAM_TTL_ARRIVALS as TTL,
     )
@@ -304,7 +311,7 @@ def test_idle_bucket_gc_bounds_state(spark, monkeypatch):
     sf = "/root/testdata/sf0.001"
     monkeypatch.setenv("EBS_VECTOR_CHUNKS", "5")
     assert len(embedding_neardup_stream(spark, sf).collect()) > 0
-    series = E.state_rows_series()
+    series = state_rows_series()
     assert sum(s["removed"] for s in series) > 0, series
     final_rows = series[-1]["state_rows"]
 

@@ -49,10 +49,8 @@ def impl(request, spark):
     param skips — with the exact reason — where the container lacks the
     protobuf runtime PySpark's transformWithState client requires."""
     if request.param == "tws":
-        from example_beam_spark.streaming.tws import (
-            ROCKSDB_PROVIDER,
-            tws_unavailable_reason,
-        )
+        from example_beam_spark.streaming.drain import ROCKSDB_PROVIDER
+        from example_beam_spark.streaming.tws import tws_unavailable_reason
 
         reason = tws_unavailable_reason()
         if reason is not None:

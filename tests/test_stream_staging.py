@@ -133,10 +133,10 @@ def test_out_of_order_layout_still_matches_batch(spark, tmp_path, sf_dir):
     CTR still equals its batch twin (before the gate, the reversed file
     order dropped in-order rows as late)."""
     from example_beam_spark.registry import load_registry
-    from example_beam_spark.streaming.entries import _stage_dir
+    from example_beam_spark.streaming.entries import stage_dir
 
     derived = _out_of_order_events_dir(tmp_path, sf_dir)
-    assert _staged_files_time_ordered(_stage_dir(derived, "events")) is False
+    assert _staged_files_time_ordered(stage_dir(derived, "events")) is False
 
     from tests.oracle import _canon
 

@@ -333,18 +333,6 @@ def test_side_input_refresh_mid_stream(spark, tmp_path):
     assert batches["s2"] > batches["s1"]
 
 
-def test_shuffle_partitions_restored_after_stream_drain(spark, sf_dir):
-    """The streaming entries size spark.sql.shuffle.partitions to cores for
-    the drain; the pre-existing session value must be restored afterwards
-    so later batch queries don't silently inherit the streaming count."""
-    from example_beam_spark.registry import load_registry
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    q = load_registry()["dedup_stream_distinct"]
-    assert q.fn(spark, sf_dir).count() > 0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 def test_drop_duplicates_within_watermark_evicts_state(spark):
     """dropDuplicatesWithinWatermark evicts a key's dedup state once the
     watermark passes its first occurrence + delay: a duplicate within the
@@ -384,42 +372,6 @@ def test_drop_duplicates_within_watermark_evicts_state(spark):
         for r in rows
     ]
     assert out == [("a", "12:00:00"), ("a", "14:00:00")]
-
-
-def test_run_to_append_idempotent_under_batch_replay(spark, tmp_path):
-    """foreachBatch is at-least-once per batch id: a batch whose first
-    delivery was killed mid-write is redelivered after recovery. The
-    run_to_append sink must REPLACE that batch's output (batch-id subdir,
-    mode=overwrite), never append a second copy — mirrors the Avro
-    streaming sink's batch-id replacement contract."""
-    import os
-
-    from example_beam_spark.streaming.entries import _batch_overwrite_sink
-
-    out_dir = str(tmp_path / "out")
-    sink = _batch_overwrite_sink(out_dir)
-    batch0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    batch1 = spark.createDataFrame([(3, "c")], "id long, v string")
-
-    # first attempt of batch 0 dies mid-write: a partial part file is on disk
-    partial = os.path.join(out_dir, "batch-000000000")
-    os.makedirs(partial)
-    spark.createDataFrame([(99, "partial")], "id long, v string").write.mode(
-        "append"
-    ).parquet(partial)
-
-    sink(batch0, 0)  # recovery redelivers batch 0
-    got = sorted(
-        (r.id, r.v) for r in spark.read.parquet(out_dir + "/batch-*").collect()
-    )
-    assert got == [(1, "a"), (2, "b")]  # partial attempt replaced, not merged
-
-    sink(batch0, 0)  # a second redelivery (retry storm) is still one copy
-    sink(batch1, 1)
-    got = sorted(
-        (r.id, r.v) for r in spark.read.parquet(out_dir + "/batch-*").collect()
-    )
-    assert got == [(1, "a"), (2, "b"), (3, "c")]
 
 
 def test_pane_info_on_time_then_late(spark):

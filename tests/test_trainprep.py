@@ -27,12 +27,12 @@ def test_cms_stream_state_is_bounded_by_cells(spark):
         cms_col_of,
     )
     from example_beam_spark.sources import load_table
-    from example_beam_spark.streaming import entries as E
+    from example_beam_spark.streaming.drain import state_rows_series
 
     sf = "/root/testdata/sf0.001"
     out = cms_token_counts_stream(spark, sf)
     assert out.count() == 10  # probe rows
-    series = E.state_rows_series()
+    series = state_rows_series()
     assert series, "no progress captured"
     final_state = series[-1]["state_rows"]
     occupied = (
@@ -98,11 +98,11 @@ def test_kmv_stream_state_bounded_and_kernel_displacement(spark):
         _kmv_bucket_fn,
         kmv_distinct_users_stream,
     )
-    from example_beam_spark.streaming import entries as E
+    from example_beam_spark.streaming.drain import state_rows_series
 
     out = kmv_distinct_users_stream(spark, "/root/testdata/sf0.001").collect()
     assert len(out) == 1 and out[0]["k"] == KMV_K
-    series = E.state_rows_series()
+    series = state_rows_series()
     assert series and series[-1]["state_rows"] <= _KMV_BUCKETS, series
 
     import pandas as pd
@@ -150,6 +150,11 @@ def test_cms_stream_two_microbatch_equals_single(spark, tmp_path):
     from example_beam_spark.sources import load_table
     from example_beam_spark.streaming.entries import run_to_final
 
+    def cells(stream):
+        return run_to_final(
+            _cms_cells_stream(stream), ["r", "c"], spark, instances=8
+        ).select("r", "c", "cnt")
+
     sf = "/root/testdata/sf0.001"
     docs = load_table(spark, sf, "documents")
     d = str(tmp_path / "two_files")
@@ -167,18 +172,8 @@ def test_cms_stream_two_microbatch_equals_single(spark, tmp_path):
     two_stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
     )
-    two = sorted(
-        tuple(r)
-        for r in run_to_final(_cms_cells_stream(two_stream), ["r", "c"], spark)
-        .select("r", "c", "cnt")
-        .collect()
-    )
+    two = sorted(tuple(r) for r in cells(two_stream).collect())
     one_stream = spark.readStream.schema(schema).parquet(d)
-    one = sorted(
-        tuple(r)
-        for r in run_to_final(_cms_cells_stream(one_stream), ["r", "c"], spark)
-        .select("r", "c", "cnt")
-        .collect()
-    )
+    one = sorted(tuple(r) for r in cells(one_stream).collect())
     assert len(one) > 0
     assert two == one

@@ -10,6 +10,12 @@ table as ~N time-ordered single-file chunks, so the existing
 and the WATERMARK ADVANCES BETWEEN DATA BATCHES — timers interleave with
 data, state is evicted mid-stream, windows close while events still flow.
 
+Every entry runs its drain through ``streaming/drain.py:drain()`` with
+the entry's own state-store instance count; the lane only changes the
+staged input. The per-batch state metrics it reports
+(:func:`state_summary`) come from the progress that ``drain()``
+captures for the last drain (``drain.state_rows_series``).
+
 What each entry must show under the multi-batch drain:
 
 - ``sessionize_events_stream``      → EXACT same oracle (proof: a session
@@ -319,12 +325,12 @@ def canon(rows) -> list[tuple]:
 
 def state_summary() -> dict:
     """Per-batch state-store metrics of the LAST drained query
-    (streaming/entries.py:LAST_PROGRESS), compressed to the numbers the
+    (streaming/drain.py:LAST_PROGRESS), compressed to the numbers the
     bounded-state claims need: peak vs final total state rows (eviction
     = final well below peak), total rows removed by state GC, and rows
     dropped as late by the watermark (must stay 0 on the time-ordered
     chunk schedule). `state_series` keeps the full per-batch trace."""
-    from example_beam_spark.streaming.entries import state_rows_series
+    from example_beam_spark.streaming.drain import state_rows_series
 
     series = state_rows_series()
     if not series:

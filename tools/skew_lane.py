@@ -465,7 +465,9 @@ def stream_join_salted_vs_not(spark, zipf1m: str) -> dict:
         F.col("dim_event_time").alias("view_ts"),
         "view_value",
     )
-    salted = run_to_append(joined, spark)
+    salted = run_to_append(
+        joined, spark, instances=spark.sparkContext.defaultParallelism
+    )
     n_salted = salted.count()
     sec_salted = round(time.time() - t0, 2)
     return {
